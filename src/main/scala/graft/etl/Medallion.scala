@@ -97,17 +97,16 @@ object Medallion {
   def partitionReplace(spark: SparkSession, sfDir: String): DataFrame = {
     val tbl = s"${warehouse(sfDir)}/silver_mobility"
     rmTree(spark, tbl) // clean slate → the query itself is idempotent
-    // session-wide conf: set for the writes below, restored after —
-    // leaking dynamic semantics would silently change how any LATER
-    // partitioned overwrite in the same session treats absent partitions
-    val prevMode = spark.conf
-      .getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    // dynamic overwrite as a per-write option: the session conf is never
+    // touched, so no later partitioned overwrite can inherit it
+    def overwrite(df: DataFrame): Unit =
+      df.write.partitionBy("date").mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").parquet(tbl)
     // four consumers below (two writes, the min/max probe, the append
     // source) — cache or each one re-runs the events scan + holiday join
     val silver = SilverMobility.fromEvents(spark, sfDir).cache()
     try {
-      silver.write.partitionBy("date").mode("overwrite").parquet(tbl)
+      overwrite(silver)
 
       // the reference's driver-side date probe (silver_mitma.py:108)
       val mm = silver.agg(min(col("date")), max(col("date"))).first()
@@ -115,22 +114,15 @@ object Medallion {
       val dMax = mm.getDate(1)
 
       // S10: dynamic overwrite replaces ONLY the dMin partition
-      silver.filter(col("date") === lit(dMin))
-        .withColumn("trips", col("trips") * 2)
-        .write.partitionBy("date").mode("overwrite").parquet(tbl)
+      overwrite(silver.filter(col("date") === lit(dMin))
+        .withColumn("trips", col("trips") * 2))
 
       // S9: append a new day — no existing file is touched
       silver.filter(col("date") === lit(dMin))
         .withColumn("date", date_add(lit(dMax), 1))
         .withColumn("trips", col("trips") * 0.5)
         .write.partitionBy("date").mode("append").parquet(tbl)
-    } finally {
-      silver.unpersist()
-      prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    } finally silver.unpersist()
 
     // read back from disk: the partition column comes from directory
     // names, and the groupBy("date") prunes/aggregates per partition

@@ -1466,9 +1466,8 @@ object AnalyticsOps {
     val wFrom = Window.partitionBy(col("from_type"))
     pairs
       .withColumn("row_n", sum(col("n")).over(wFrom))
-      .withColumn("p", ((col("n") * 2000000L + col("row_n") -
-        pmod(col("n") * 2000000L + col("row_n"), col("row_n") * 2)) /
-        (col("row_n") * 2)) / lit(1000000.0))
+      .withColumn("p", Parity.halfUp(col("n") * 1000000L, col("row_n"))
+        .cast("double") / 1000000.0)
       .select(col("from_type"), col("to_type"), col("n"), col("p"))
       .orderBy(col("from_type"), col("to_type"))
   }

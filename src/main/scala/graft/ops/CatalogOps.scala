@@ -1032,13 +1032,10 @@ object CatalogOps {
       .agg(count(lit(1)).as("n_observed"))
     val n = ev.agg(count(lit(1)).as("n_total"))
     truth.join(obs, Seq("t")).crossJoin(broadcast(n))
-      .withColumn("est_x10",
-        lit(20L) * col("n_observed") - lit(2L) * col("n_total"))
-      .select(col("t"), col("n_true"), col("n_observed"),
-        ((col("est_x10") - pmod(col("est_x10"), lit(10L))) / 10L)
-          .cast("long").as("n_est"),
-        (((col("est_x10") - pmod(col("est_x10"), lit(10L))) / 10L)
-          .cast("long") - col("n_true")).as("est_err"))
+      .withColumn("n_est", Parity.floorDiv(
+        lit(20L) * col("n_observed") - lit(2L) * col("n_total"), lit(10L)))
+      .select(col("t"), col("n_true"), col("n_observed"), col("n_est"),
+        (col("n_est") - col("n_true")).as("est_err"))
       .orderBy(col("t"))
   }
 

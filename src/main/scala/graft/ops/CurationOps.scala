@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import Parity.halfUp
 
 /** Corpus-curation operators — the data-SELECTION layer of a training
   * pipeline, downstream of the cleaning/dedup families in TextOps /
@@ -1535,10 +1536,7 @@ object CurationOps {
     val cdf = per
       .withColumn("cum", sum(col("cnt")).over(wCdf))
       .withColumn("n_src", sum(col("cnt")).over(wSrc))
-      .withColumn("cdf_e6",
-        ((col("cum") * 2000000L + col("n_src") -
-          pmod(col("cum") * 2000000L + col("n_src"), col("n_src") * 2)) /
-          (col("n_src") * 2)).cast("long"))
+      .withColumn("cdf_e6", halfUp(col("cum") * 1000000L, col("n_src")))
       .select(col("source"), col("score"), col("cdf_e6"))
     Tables.documents(spark, sfDir)
       .filter(col("doc_id") < 100)
@@ -2387,6 +2385,24 @@ object CurationOps {
        |FROM cells""".stripMargin
 
   // ------------------------------------------------- NB calibration
+  /** The e6-lattice softmax over [[nbClassScores]] — per (doc, class):
+    * slp, per-doc max `m`, rank `rn` (slp desc, cls asc), quantized
+    * exp `p_e6`, exact-integer partition `z_e6`, half-up posterior
+    * `q_e6`. Factored so calibration and label-noise audit the SAME
+    * posteriors. */
+  private def nbSoftmaxFrame(heldOut: DataFrame, model: DataFrame,
+      counts: DataFrame): DataFrame = {
+    val wd = Window.partitionBy(col("doc_id"))
+    val wr = wd.orderBy(col("slp").desc, col("cls"))
+    nbClassScores(heldOut, model, counts)
+      .withColumn("m", max(col("slp")).over(wd))
+      .withColumn("rn", row_number().over(wr))
+      .withColumn("p_e6", round(exp((col("slp") - col("m")).cast("double")
+        / 1000000.0) * 1000000.0, 0).cast("long"))
+      .withColumn("z_e6", sum(col("p_e6")).over(wd))
+      .withColumn("q_e6", halfUp(col("p_e6") * 1000000L, col("z_e6")))
+  }
+
   /** Reliability/calibration audit of the trained NB classifier — the
     * third leg of train → infer → CALIBRATE (DeGroot–Fienberg
     * reliability diagrams; Guo et al. ICML'17 made the check standard
@@ -2412,31 +2428,6 @@ object CurationOps {
     * frame), then a 10-row bucket aggregate and an A6 scalar for the
     * corpus Brier. Nothing new shuffles at corpus scale.
     */
-  /** Exact half-up integer division (the stableAvg idiom) — shared by
-    * the NB softmax/calibration/label-noise chain. */
-  private def halfUpL(num: Column, den: Column): Column = {
-    val n2 = num * 2L + den
-    call_function("div", n2 - pmod(n2, den * 2), den * 2)
-  }
-
-  /** The e6-lattice softmax over [[nbClassScores]] — per (doc, class):
-    * slp, per-doc max `m`, rank `rn` (slp desc, cls asc), quantized
-    * exp `p_e6`, exact-integer partition `z_e6`, half-up posterior
-    * `q_e6`. Factored so calibration and label-noise audit the SAME
-    * posteriors. */
-  private def nbSoftmaxFrame(heldOut: DataFrame, model: DataFrame,
-      counts: DataFrame): DataFrame = {
-    val wd = Window.partitionBy(col("doc_id"))
-    val wr = wd.orderBy(col("slp").desc, col("cls"))
-    nbClassScores(heldOut, model, counts)
-      .withColumn("m", max(col("slp")).over(wd))
-      .withColumn("rn", row_number().over(wr))
-      .withColumn("p_e6", round(exp((col("slp") - col("m")).cast("double")
-        / 1000000.0) * 1000000.0, 0).cast("long"))
-      .withColumn("z_e6", sum(col("p_e6")).over(wd))
-      .withColumn("q_e6", halfUpL(col("p_e6") * 1000000L, col("z_e6")))
-  }
-
   def nbCalibration(spark: SparkSession, sfDir: String): DataFrame = {
     val (model, counts) = nbModel(spark, sfDir)
     val heldOut = Tables.documents(spark, sfDir)
@@ -2462,11 +2453,11 @@ object CurationOps {
         sum(col("conf_e6")).cast("long").as("sc_e6"))
       .crossJoin(broadcast(g))
       .select(col("bin"), col("n_docs"), col("n_correct"),
-        halfUpL(col("n_correct") * 1000000L, col("n_docs"))
+        halfUp(col("n_correct") * 1000000L, col("n_docs"))
           .cast("double").divide(1000000.0).as("accuracy"),
-        halfUpL(col("sc_e6"), col("n_docs"))
+        halfUp(col("sc_e6"), col("n_docs"))
           .cast("double").divide(1000000.0).as("avg_conf"),
-        halfUpL(col("sb"), col("n_all") * 1000000L).as("brier_e6"))
+        halfUp(col("sb"), col("n_all") * 1000000L).as("brier_e6"))
       .orderBy(col("bin"))
   }
 
@@ -2812,7 +2803,7 @@ object CurationOps {
         round(exp((col("slp") - col("m")).cast("double") * 2.0 /
           (lit(1000000.0) * col("t_x2"))) * 1000000.0, 0).cast("long"))
       .withColumn("z_e6", sum(col("p_e6")).over(wd))
-      .withColumn("q_e6", halfUpL(col("p_e6") * 1000000L, col("z_e6")))
+      .withColumn("q_e6", halfUp(col("p_e6") * 1000000L, col("z_e6")))
       .filter(col("cls") === col("lang"))
       .withColumn("nll_e6",
         -round(log(greatest(col("q_e6"), lit(1L)).cast("double")
@@ -2828,7 +2819,7 @@ object CurationOps {
           .over(wAll))
       .select(round(col("t_x2") / 2.0, 1).as("temperature"),
         col("n_docs"), col("nll_e6_total"),
-        halfUpL(col("nll_e6_total"), col("n_docs")).as("avg_nll_e6"),
+        halfUp(col("nll_e6_total"), col("n_docs")).as("avg_nll_e6"),
         (col("t_x2") === col("best_t")).as("is_best"))
       .orderBy(col("temperature"))
   }
@@ -2916,10 +2907,6 @@ object CurationOps {
       .withColumn("r", row_number().over(wv))
       .filter(col("r") === 1)
       .select(col("doc_id"), col("y").as("z"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     // M-step: one-coin accuracy per annotator against current labels
     def mStep(z: DataFrame): DataFrame =
       labels.join(z, Seq("doc_id"))
@@ -3086,10 +3073,10 @@ object CurationOps {
         sum(col("covered")).cast("long").as("n_covered"))
       .select(col("n_cal"), col("qhat_e6"), col("n_test"),
         col("sum_set_size"),
-        halfUpL(col("sum_set_size") * 1000000L, col("n_test"))
+        halfUp(col("sum_set_size") * 1000000L, col("n_test"))
           .as("avg_set_e6"),
         col("n_covered"),
-        halfUpL(col("n_covered") * 1000000L, col("n_test"))
+        halfUp(col("n_covered") * 1000000L, col("n_test"))
           .as("coverage_e6"))
   }
 
@@ -3196,7 +3183,7 @@ object CurationOps {
       .filter(col("rq") === 1)
       .groupBy(col("lang"), col("cls"))
       .agg(count(lit(1)).as("n_docs"),
-        halfUpL(sum(col("q_e6")), count(lit(1))).as("avg_conf_e6"))
+        halfUp(sum(col("q_e6")), count(lit(1))).as("avg_conf_e6"))
       .select(col("lang").as("given_lang"), col("cls").as("pred_cls"),
         col("n_docs"), col("avg_conf_e6"),
         (col("lang") =!= col("cls")).as("is_error"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import Parity.halfUp
 
 /** Deduplication operators for a training-data pipeline over `documents`:
   * exact (hash groupBy), n-gram Jaccard (shingle-bucket candidate join),
@@ -1687,17 +1688,12 @@ object DedupOps {
       .groupBy(col("source"))
       .agg(count(lit(1)).as("chunks_owned"),
         sum(col("bytes")).cast("long").as("bytes_stored"))
-    def halfUpRatioE6(num: Column, den: Column): Column = {
-      val n2 = num * 2000000L + den
-      (call_function("div", n2 - pmod(n2, den * 2), den * 2))
-        .cast("double") / 1000000.0
-    }
     logical.join(owned, Seq("source"), "left")
       .select(col("source"), col("chunks"), col("bytes_logical"),
         coalesce(col("chunks_owned"), lit(0L)).as("chunks_owned"),
         coalesce(col("bytes_stored"), lit(0L)).as("bytes_stored"),
-        halfUpRatioE6(coalesce(col("bytes_stored"), lit(0L)),
-          col("bytes_logical")).as("stored_share"))
+        (halfUp(coalesce(col("bytes_stored"), lit(0L)) * 1000000L,
+          col("bytes_logical")).cast("double") / 1000000.0).as("stored_share"))
       .orderBy(col("source"))
   }
 

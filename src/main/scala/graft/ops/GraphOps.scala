@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
+import Parity.{halfUp, signedHalfUp}
 
 /** Iterative graph analytics over the purchase graph, Spark-first:
   * edges live in a DataFrame, one PageRank iteration is one
@@ -1391,9 +1392,8 @@ object GraphOps {
     val mx = a2.agg(max(col("a2")).as("mx"))
     a2.crossJoin(broadcast(mx))
       .select(col("s"), col("a2"),
-        (((col("a2") * 2000000L + col("mx")) -
-          pmod(col("a2") * 2000000L + col("mx"), col("mx") * 2)) /
-          (col("mx") * 2) / lit(1000000.0)).as("auth"))
+        (halfUp(col("a2") * 1000000L, col("mx")).cast("double") / 1000000.0)
+          .as("auth"))
       .orderBy(col("s"))
   }
 
@@ -1526,18 +1526,13 @@ object GraphOps {
       .select(col("c"), col("d_c"), coalesce(col("e_c"), lit(0L)).as("e_c"))
       .withColumn("num",
         lit(4L * m) * col("e_c") - col("d_c") * col("d_c"))
-      .withColumn("contrib", signedHalfUpE6(col("num"), lit(4L * m * m)))
-      .withColumn("q_total", signedHalfUpE6(sum(col("num")).over(wt), lit(4L * m * m)))
+      .withColumn("contrib",
+        signedHalfUp(col("num") * 1000000L, lit(4L * m * m)).cast("double") / 1e6)
+      .withColumn("q_total",
+        signedHalfUp(sum(col("num")).over(wt) * 1000000L, lit(4L * m * m))
+          .cast("double") / 1e6)
       .select(col("c"), col("d_c"), col("e_c"), col("contrib"), col("q_total"))
       .orderBy(col("c"))
-  }
-
-  /** Signed half-up e6 ratio num/den (den > 0) as an exact-integer
-    * expression — the house lattice division, factored for reuse. */
-  private def signedHalfUpE6(num: Column, den: Column): Column = {
-    val a = abs(num) * 2000000L
-    val h = ((a + den) - pmod(a + den, den * 2)) / (den * 2)
-    (when(num < 0, -h).otherwise(h)).cast("long").cast("double") / 1e6
   }
 
   private lazy val modularityOracle =

@@ -26,21 +26,67 @@ import org.apache.spark.sql.functions._
 object Parity {
   def r4(c: Column): Column = round(c, 4)
 
-  /** Order-insensitive 4 dp average over decimal-quantized data.
-    * floor((2·sum_e4 + n) / 2n) / 1e4 in exact integer arithmetic.
+  // ------------------------------------------------- lattice division
+  // The ONE definition of integer-lattice division. Every operator that
+  // reports a ratio on an e2/e4/e6/e9 lattice scales the numerator at
+  // the call site (`halfUp(num * 1000000L, den)`), widens to
+  // decimal(38,0) there when 2·num would overflow a long, and turns the
+  // lattice value into a double there (`.cast("double") / 1e6`).
+  //
+  // Contract shared by all three Column helpers:
+  //  - operands: integral or decimal(p,0) columns; den > 0;
+  //  - result: a long (Spark `div`), exact at any magnitude whose
+  //    quotient fits a long — `/` would go through double, exact only
+  //    below 2^53;
+  //  - the numerator is pulled down to an exact multiple of the
+  //    divisor with `pmod` first, so `div`'s truncation IS the floor
+  //    for either sign of num.
+  // The `*Sql` twins render the same value in DuckDB, whose `//` and
+  // `%` truncate toward zero (-7 // 2 = -3): the positive mod
+  // ((x % d) + d) % d forces the floor there too.
+
+  /** ⌊num / den⌋, den > 0, num of either sign. */
+  def floorDiv(num: Column, den: Column): Column =
+    call_function("div", num - pmod(num, den), den)
+
+  /** DuckDB rendering of [[floorDiv]]. */
+  def floorDivSql(num: String, den: String): String =
+    s"((($num) - ((($num) % ($den) + ($den)) % ($den))) // ($den))"
+
+  /** num / den rounded half-up: ⌊(2·num + den) / (2·den)⌋, den > 0.
+    * Ties round toward +∞ for either sign (2.5 → 3, −2.5 → −2). */
+  def halfUp(num: Column, den: Column): Column =
+    floorDiv(num * 2L + den, den * 2L)
+
+  /** DuckDB rendering of [[halfUp]]. */
+  def halfUpSql(num: String, den: String): String =
+    floorDivSql(s"2 * ($num) + ($den)", s"2 * ($den)")
+
+  /** num / den rounded half away from zero, den > 0: sign(num) ·
+    * [[halfUp]](|num|, den) (2.5 → 3, −2.5 → −3). Differs from
+    * [[halfUp]] only on negative ties — the rule for signed quantities
+    * (residuals, eigenvector components) whose oracle mirrors the
+    * rounding symmetrically. */
+  def signedHalfUp(num: Column, den: Column): Column = {
+    val h = halfUp(abs(num), den)
+    when(num < 0, -h).otherwise(h)
+  }
+
+  /** DuckDB rendering of [[signedHalfUp]]. */
+  def signedHalfUpSql(num: String, den: String): String =
+    s"(CASE WHEN ($num) < 0 THEN -1 ELSE 1 END) * " +
+      s"(${halfUpSql(s"ABS($num)", den)})"
+
+  /** Order-insensitive 4 dp average over decimal-quantized data:
+    * [[halfUp]] of the e4 sum over the count, as a double.
     */
   def stableAvg(c: Column): Column = {
     val sumE4 = round(round(sum(c), 4) * 10000, 0).cast("long")
-    val n = count(c)
-    val num = sumE4 * 2 + n
-    val den = n * 2
-    // (num - pmod(num, den)) is an exact multiple of den; the long/long
-    // division therefore yields an exact integer double — bit-identical
-    // to DuckDB's `//` floor division.
-    ((num - pmod(num, den)) / den) / 10000.0
+    halfUp(sumE4, count(c)).cast("double") / 10000.0
   }
 
-  /** DuckDB rendering of [[stableAvg]] (`//` = floor division). */
+  /** DuckDB rendering of [[stableAvg]] (the sum and count are
+    * nonnegative, so `//` alone is the floor). */
   def stableAvgSql(e: String): String =
     s"CAST((2*CAST(ROUND(ROUND(SUM($e),4)*10000) AS BIGINT) + COUNT($e)) " +
       s"// (2*COUNT($e)) AS DOUBLE)/10000.0"
@@ -77,10 +123,8 @@ object Parity {
   def mixBucketHi(key: Column, k: Long, buckets: Long): Column = {
     require(4294967296L % buckets == 0, s"buckets $buckets must divide 2^32")
     val shift = 4294967296L / buckets
-    val prod = pmod(pmod(key, lit(2147483648L)) * lit(k), lit(4294967296L))
-    // exact-multiple floor division (the stableAvg idiom) — identical
-    // to DuckDB's `//` on nonnegative operands
-    ((prod - pmod(prod, lit(shift))) / lit(shift)).cast("long")
+    floorDiv(pmod(pmod(key, lit(2147483648L)) * lit(k), lit(4294967296L)),
+      lit(shift))
   }
 
   /** DuckDB rendering of [[mixBucketHi]] (`//` = floor division). */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorExprs
+import Parity.{halfUp, halfUpSql, signedHalfUp}
 
 /** Similarity search over the `embeddings` table (`Array[Float]` column).
   *
@@ -222,10 +223,6 @@ object SimilarityOps {
       .localCheckpoint()
     val dims = e.select(col("vec_id"), posexplode(col("xq")))
       .select(col("vec_id"), (col("pos") + 1).as("d"), col("col").as("x"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     val mean = dims.groupBy(col("d"))
       .agg(halfUp(sum(col("x")), count(lit(1))).as("v"))
     def round1(v: DataFrame): DataFrame = {
@@ -251,11 +248,6 @@ object SimilarityOps {
   }
 
   private val geoMedianOracle = {
-    // components are SIGNED: force the floor with the positive mod
-    // (DuckDB // truncates toward zero; the cuped parity rule)
-    def floorHalfUp(num: String, den: String): String =
-      s"((2 * $num + $den) - (((2 * $num + $den) % (2 * $den) + 2 * $den)" +
-        s" % (2 * $den))) // (2 * $den)"
     def roundSql(prev: String, k: Int): String =
       s"""w$k AS (SELECT vec_id,
          |          CAST(ROUND(1e9 / sqrt(CAST(d2 AS DOUBLE))) AS BIGINT)
@@ -266,7 +258,7 @@ object SimilarityOps {
          |              GROUP BY dims.vec_id)
          |        WHERE d2 > 0),
          |v$k AS (SELECT d,
-         |          ${floorHalfUp("SUM(w * x)", "SUM(w)")} AS v
+         |          ${halfUpSql("SUM(w * x)", "SUM(w)")} AS v
          |        FROM dims JOIN w$k USING (vec_id) GROUP BY d)"""
         .stripMargin
     s"""WITH e AS (SELECT vec_id, list_transform(embedding,
@@ -275,7 +267,7 @@ object SimilarityOps {
        |dims AS (SELECT vec_id, CAST(d AS INTEGER) AS d,
        |                xq[CAST(d AS INTEGER)] AS x
        |         FROM e, range(1, 65) t(d)),
-       |v0 AS (SELECT d, ${floorHalfUp("SUM(x)", "COUNT(*)")} AS v
+       |v0 AS (SELECT d, ${halfUpSql("SUM(x)", "COUNT(*)")} AS v
        |       FROM dims GROUP BY d),
        |${roundSql("v0", 1)},
        |${roundSql("v1", 2)}
@@ -2303,9 +2295,8 @@ object SimilarityOps {
         max(col("nsq")).as("max_nsq"),
         sum(col("nsq_e6")).as("s_e6"))
       .select(col("label"), col("n_vecs"), col("min_nsq"), col("max_nsq"),
-        (((col("s_e6") * 2 + col("n_vecs")) -
-          pmod(col("s_e6") * 2 + col("n_vecs"), col("n_vecs") * 2)) /
-          (col("n_vecs") * 2) / lit(1000000.0)).as("avg_nsq"))
+        (halfUp(col("s_e6"), col("n_vecs")).cast("double") / 1000000.0)
+          .as("avg_nsq"))
       .orderBy(col("label"))
   }
 
@@ -2406,9 +2397,8 @@ object SimilarityOps {
         sum(when(col("clabel") === col("true_label"), 1L).otherwise(0L))
           .as("n_correct"))
       .withColumn("acc",
-        ((col("n_correct") * 2000000L + col("n_panel") -
-          pmod(col("n_correct") * 2000000L + col("n_panel"),
-            col("n_panel") * 2)) / (col("n_panel") * 2)) / lit(1000000.0))
+        halfUp(col("n_correct") * 1000000L, col("n_panel"))
+          .cast("double") / 1000000.0)
       .orderBy(col("true_label"))
   }
 
@@ -2871,18 +2861,14 @@ object SimilarityOps {
         (col("n") * col("sxx") - col("sx") * col("sx_j")).as("s"))
       .localCheckpoint()
 
-    def signedHalfUpE6Dec(num: Column, den: Column): Column = {
-      val a = abs(num) * lit(2000000L)
-      val h = call_function("div", a + den - pmod(a + den, den * 2), den * 2)
-      when(num < 0, -h).otherwise(h).cast("long")
-    }
     def step(v: DataFrame): DataFrame = {
       val u = scat.join(broadcast(v), col("j") === col("d"))
         .groupBy(col("i"))
         .agg(sum(col("s").cast("decimal(38,0)") * col("v")).as("u"))
       val m = u.agg(max(abs(col("u"))).as("m"))
       u.crossJoin(broadcast(m))
-        .select(col("i").as("d"), signedHalfUpE6Dec(col("u"), col("m")).as("v"))
+        .select(col("i").as("d"),
+          signedHalfUp(col("u") * 1000000L, col("m")).as("v"))
     }
     val v0 = spark.range(1, PcaDim + 1)
       .select(col("id").cast("int").as("d"), lit(1000000L).as("v"))
@@ -2957,10 +2943,6 @@ object SimilarityOps {
       .localCheckpoint()
     val dims = e.select(col("vec_id"), posexplode(col("xq")))
       .select(col("vec_id"), (col("pos") + 1).as("d"), col("col").as("x"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     val mean = dims.groupBy(col("d"))
       .agg(halfUp(sum(col("x")), count(lit(1))).as("v"))
     val d2 = dims.join(broadcast(mean), Seq("d"))
@@ -3150,10 +3132,6 @@ object SimilarityOps {
     val dims = e.select(col("vec_id"), posexplode(col("xq")))
       .select(col("vec_id"), (col("pos") + 1).as("d"), col("col").as("x"))
       .filter(col("d") <= 6)
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     val mean = dims.groupBy(col("d"))
       .agg(halfUp(sum(col("x")), count(lit(1))).as("v"))
     val cells = dims.join(broadcast(mean), Seq("d"))
@@ -3238,6 +3216,32 @@ object SimilarityOps {
   /** Capacity factor × 100 (1.25 — the Switch Transformer default). */
   private val MoeCapacityE2 = 125L
 
+  /** Route a (vec_id, embedding, norm) frame against the STANDING
+    * expert bank — the ONE routing definition: [[moeRouter]] audits
+    * the whole corpus through it, the streaming twin
+    * ([[graft.streaming.StreamingOps.moeRouteStream]]) routes each
+    * arriving micro-batch. Output: per (vector, expert) the raw gate
+    * score, e6-lattice softmax gate, and the top-k rank. */
+  private[graft] def moeRouteBatch(
+      vectors: DataFrame, spark: SparkSession, sfDir: String): DataFrame = {
+    graft.functions.VectorExprs.register(spark)
+    val experts = coarseCentroids(spark, sfDir)
+      .filter(col("cell") < MoeExperts)
+      .select(col("cell").as("expert"), col("cv").as("sv"),
+        sqrt(expr("vec_dot(cv, cv)")).as("sn"))
+    val wd = Window.partitionBy(col("vec_id"))
+    vectors.crossJoin(broadcast(experts))
+      .withColumn("score", cosine("embedding", "norm", "sv", "sn"))
+      .select(col("vec_id"), col("expert"), col("score"))
+      .withColumn("mx", max(col("score")).over(wd))
+      .withColumn("p_e6",
+        round(exp(col("score") - col("mx")) * 1000000.0, 0).cast("long"))
+      .withColumn("z_e6", sum(col("p_e6")).over(wd))
+      .withColumn("g_e6", halfUp(col("p_e6") * 1000000L, col("z_e6")))
+      .withColumn("rk", row_number().over(
+        wd.orderBy(col("score").desc, col("expert"))))
+  }
+
   /** Mixture-of-experts ROUTER load-balance audit (Shazeer et al.
     * ICLR'17 top-k gating; Fedus et al. JMLR'22 Switch): route every
     * corpus vector to its top-2 of [[MoeExperts]] experts by cosine
@@ -3265,37 +3269,6 @@ object SimilarityOps {
     * frames); the overflow census is pure arithmetic on the
     * per-expert counts (max(n_top1 - capacity, 0)) — no sort, no
     * per-expert window; output is expert-sized. */
-  private def moeHalfUp(num: Column, den: Column): Column = {
-    val n2 = num * 2L + den
-    call_function("div", n2 - pmod(n2, den * 2), den * 2)
-  }
-
-  /** Route a (vec_id, embedding, norm) frame against the STANDING
-    * expert bank — the ONE routing definition: [[moeRouter]] audits
-    * the whole corpus through it, the streaming twin
-    * ([[graft.streaming.StreamingOps.moeRouteStream]]) routes each
-    * arriving micro-batch. Output: per (vector, expert) the raw gate
-    * score, e6-lattice softmax gate, and the top-k rank. */
-  private[graft] def moeRouteBatch(
-      vectors: DataFrame, spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val experts = coarseCentroids(spark, sfDir)
-      .filter(col("cell") < MoeExperts)
-      .select(col("cell").as("expert"), col("cv").as("sv"),
-        sqrt(expr("vec_dot(cv, cv)")).as("sn"))
-    val wd = Window.partitionBy(col("vec_id"))
-    vectors.crossJoin(broadcast(experts))
-      .withColumn("score", cosine("embedding", "norm", "sv", "sn"))
-      .select(col("vec_id"), col("expert"), col("score"))
-      .withColumn("mx", max(col("score")).over(wd))
-      .withColumn("p_e6",
-        round(exp(col("score") - col("mx")) * 1000000.0, 0).cast("long"))
-      .withColumn("z_e6", sum(col("p_e6")).over(wd))
-      .withColumn("g_e6", moeHalfUp(col("p_e6") * 1000000L, col("z_e6")))
-      .withColumn("rk", row_number().over(
-        wd.orderBy(col("score").desc, col("expert"))))
-  }
-
   def moeRouter(spark: SparkSession, sfDir: String): DataFrame = {
     val e = withNorm(spark, sfDir)
     val soft = moeRouteBatch(e, spark, sfDir)

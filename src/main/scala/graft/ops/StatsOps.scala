@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import Parity.{floorDiv, halfUp, halfUpSql, signedHalfUp, signedHalfUpSql}
 
 /** Decision-analytics operators a BI/growth team runs on top of the
   * warehouse the reference builds (beyond the reference's own query
@@ -151,10 +152,7 @@ object StatsOps {
         .as("digit"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n"))
       .withColumn("tot", sum(col("n")).over(w))
-      .withColumn("share_e6",
-        ((col("n") * 2000000L + col("tot") -
-          pmod(col("n") * 2000000L + col("tot"), col("tot") * 2)) /
-          (col("tot") * 2)).cast("long"))
+      .withColumn("share_e6", halfUp(col("n") * 1000000L, col("tot")))
       .withColumn("expected_e6", expected)
       .select(col("digit"), col("n"), col("share_e6"), col("expected_e6"),
         (col("share_e6") - col("expected_e6")).as("dev_e6"))
@@ -822,9 +820,8 @@ object StatsOps {
       .groupBy(col("day")).agg(count(lit(1)).as("wau"))
     dau.join(wau, Seq("day"))
       .select(col("day"), col("dau"), col("wau"),
-        (((col("dau") * 2000000L + col("wau")) -
-          pmod(col("dau") * 2000000L + col("wau"), col("wau") * 2)) /
-          (col("wau") * 2) / lit(1000000.0)).as("stickiness"))
+        (halfUp(col("dau") * 1000000L, col("wau")).cast("double") / 1000000.0)
+          .as("stickiness"))
       .orderBy(col("day"))
   }
 
@@ -1096,9 +1093,7 @@ object StatsOps {
         - d(st0) * d(ntp) * d(ncp) * d(nc0)
         - d(scp) * d(ntp) * d(nt0) * d(nc0)
         + d(sc0) * d(ntp) * d(nt0) * d(ncp)) * lit(10000L).cast(dec)
-      val num2 = numRaw * lit(2L).cast(dec) + dd
-      val den2 = dd * lit(2L).cast(dec)
-      ((num2 - pmod(num2, den2)) / den2).cast("long")
+      halfUp(numRaw, dd)
     }
     m.select(col("n_tp").as("n_treat_post"), col("n_t0").as("n_treat_pre"),
       col("n_cp").as("n_ctrl_post"), col("n_c0").as("n_ctrl_pre"),
@@ -1256,10 +1251,6 @@ object StatsOps {
       sum(col("nh")).cast("long").as("nt"),
       sum(call_function("div", col("r") * col("r"), col("nh")))
         .cast("long").as("q"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     m.crossJoin(broadcast(tot))
       .select(col("source"), col("nh").as("n_docs"),
         halfUp(col("r") * 1000000L, col("nh")).as("sigma_e6"),
@@ -1390,15 +1381,12 @@ object StatsOps {
         .as("vy"),
       (col("n").cast(dec) * col("sxy") - col("sx").cast(dec) * col("sy"))
         .as("cov"))
-    // signed half-up θ in e6: floor((2·cov·1e6 + vx) / (2·vx)) — the
-    // numerator is adjusted to an exact multiple, so the decimal
-    // divide is exact and integral
-    val num = col("cov") * lit(2000000L).cast(dec) + col("vx")
-    val den = col("vx") * lit(2L).cast(dec)
     withC.select(col("n").as("n_units"),
       col("sx").cast("long").as("sum_pre"),
       col("sy").cast("long").as("sum_post"),
-      ((num - pmod(num, den)) / den).cast("long").as("theta_e6"),
+      // θ in e6, half-up over the exact decimal(38,0) moments (cov
+      // may be negative; vx > 0)
+      halfUp(col("cov") * 1000000L, col("vx")).as("theta_e6"),
       round(col("cov").cast("double") * col("cov").cast("double") /
         (col("vx").cast("double") * col("vy").cast("double")), 6)
         .as("var_reduction"))
@@ -1471,10 +1459,6 @@ object StatsOps {
       .withColumn("cr", col("cg") - col("c")) // rest-of-corpus count
       .withColumn("nr", col("nt") - col("ns"))
     val w = Window.partitionBy(col("source")).orderBy(col("len"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     axis
       .withColumn("fs", sum(col("c")).over(w))
       .withColumn("fr", sum(col("cr")).over(w))
@@ -2764,10 +2748,6 @@ object StatsOps {
         sum(lit(1L) - col("y")).cast("long").as("neg"))
     val wf = Window.partitionBy(col("feature"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    def halfUpE6(num: Column, den: Column): Column = {
-      val n2 = num * 2000000L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     val scored = perCat
       .withColumn("tp", sum(col("pos")).over(wf))
       .withColumn("tn", sum(col("neg")).over(wf))
@@ -2776,37 +2756,21 @@ object StatsOps {
           ((col("neg") + 0.5) / (col("tn") + 0.5))) * 1000000.0, 0)
         .cast("long"))
       .withColumn("dshare_e6",
-        halfUpE6(col("pos"), col("tp")) - halfUpE6(col("neg"), col("tn")))
+        halfUp(col("pos") * 1000000L, col("tp")) -
+          halfUp(col("neg") * 1000000L, col("tn")))
       .withColumn("iv_term_e12", col("dshare_e6") * col("woe_e6"))
-    // signed half-up (half away from zero): IV terms can dip negative
-    // under smoothing+rounding, and DuckDB's % is C-style on negatives
-    // while pmod is not — abs/negate sidesteps the convention split
-    def signedHalfUpE6(num: Column, den: Column): Column = {
-      val a = abs(num) * 2L + den
-      val h = call_function("div", a - pmod(a, den * 2), den * 2)
-      when(num < 0, -h).otherwise(h)
-    }
+    // IV terms can dip negative under smoothing+rounding: half away
+    // from zero, mirrored by the oracle
     scored
       .withColumn("iv_e6_sum", sum(col("iv_term_e12")).over(wf))
       .select(col("feature"), col("category"), col("pos"), col("neg"),
         col("woe_e6"),
-        signedHalfUpE6(col("iv_term_e12"),
-          lit(1000000L)).as("iv_term_e6"),
-        signedHalfUpE6(col("iv_e6_sum"),
-          lit(1000000L)).as("feature_iv_e6"))
+        signedHalfUp(col("iv_term_e12"), lit(1000000L)).as("iv_term_e6"),
+        signedHalfUp(col("iv_e6_sum"), lit(1000000L)).as("feature_iv_e6"))
       .orderBy(col("feature"), col("category"))
   }
 
-  private def woeHalfUpSql(num: String, den: String): String =
-    s"((2000000*($num) + $den) - (2000000*($num) + $den) % (2*($den))) " +
-      s"// (2*($den))"
-
   private val woeIvOracle = {
-    // signed half-up e6 of n/d (d = 1e12 scale drop): half away from
-    // zero via ABS, matching the Spark side's pmod-free form
-    val hup = (n: String, d: String) =>
-      s"(CASE WHEN ($n) < 0 THEN -1 ELSE 1 END) * " +
-        s"(((2*ABS($n) + $d) - (2*ABS($n) + $d) % (2*($d))) // (2*($d)))"
     s"""WITH urgent AS (
        |  SELECT o_custkey,
        |         MAX(CASE WHEN o_orderpriority = '1-URGENT'
@@ -2833,16 +2797,16 @@ object StatsOps {
        |         CAST(ROUND(ln(((pos + 0.5) / (tp + 0.5)) /
        |                       ((neg + 0.5) / (tn + 0.5))) * 1000000.0)
        |              AS BIGINT) AS woe_e6,
-       |         ${woeHalfUpSql("pos", "tp")} -
-       |           ${woeHalfUpSql("neg", "tn")} AS dshare_e6
+       |         ${halfUpSql("1000000*pos", "tp")} -
+       |           ${halfUpSql("1000000*neg", "tn")} AS dshare_e6
        |       FROM tot),
        |iv AS (SELECT *, dshare_e6 * woe_e6 AS iv_term_e12,
        |         CAST(SUM(dshare_e6 * woe_e6) OVER (PARTITION BY feature)
        |              AS BIGINT) AS iv_sum_e12
        |       FROM sc)
        |SELECT feature, category, pos, neg, woe_e6,
-       |       ${hup("iv_term_e12", "1000000")} AS iv_term_e6,
-       |       ${hup("iv_sum_e12", "1000000")} AS feature_iv_e6
+       |       ${signedHalfUpSql("iv_term_e12", "1000000")} AS iv_term_e6,
+       |       ${signedHalfUpSql("iv_sum_e12", "1000000")} AS feature_iv_e6
        |FROM iv ORDER BY feature, category""".stripMargin
   }
 
@@ -2882,8 +2846,6 @@ object StatsOps {
     * ratings cannot overflow. No global sort, no driver loop.
     */
   def krippendorff(spark: SparkSession, sfDir: String): DataFrame = {
-    def exactDiv(num: Column, den: Column): Column =
-      call_function("div", num, den)
     val uc = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_orderkey").as("u"), col("l_returnflag").as("cat"))
       .agg(count(lit(1)).as("nuc"))
@@ -2895,8 +2857,10 @@ object StatsOps {
       count(lit(1)).as("n_units"),
       sum(col("m")).cast("long").as("n"),
       max(col("m")).as("max_m"),
-      sum((exactDiv(lit(KaL), col("m") - 1) *
-        exactDiv(col("m") * col("m") - col("s2u"), lit(2L)))
+      // both divisions are exact: KaL is a multiple of every m − 1, and
+      // m² − Σn² is even
+      sum((floorDiv(lit(KaL), col("m") - 1) *
+        floorDiv(col("m") * col("m") - col("s2u"), lit(2L)))
         .cast("decimal(38,0)")).as("o_l"))
     val marg = uc.join(per.select(col("u")), Seq("u"))
       .groupBy(col("cat")).agg(sum(col("nuc")).as("nc"))
@@ -2907,27 +2871,18 @@ object StatsOps {
 
     // half away from zero on the e6 lattice, decimal-widened (the
     // pcaPower idiom — 2e6·den overflows a long here)
-    def signedHalfUpE6Dec(num: Column, den: Column): Column = {
-      val a = abs(num) * lit(2000000L)
-      val h = call_function("div", a + den - pmod(a + den, den * 2), den * 2)
-      when(num < 0, -h).otherwise(h).cast("long")
-    }
     units.crossJoin(broadcast(d2))
       .select(col("n_units"), col("n").as("n_ratings"), col("max_m"),
-        (signedHalfUpE6Dec(col("o_l") * 2,
+        (signedHalfUp(col("o_l") * 2 * 1000000L,
           col("n").cast("decimal(38,0)") * KaL)
           .cast("double") / 1000000.0).as("do_rate"),
-        (signedHalfUpE6Dec(
-          col("d22") * KaL - col("o_l") * 2 * (col("n") - 1),
+        (signedHalfUp(
+          (col("d22") * KaL - col("o_l") * 2 * (col("n") - 1)) * 1000000L,
           col("d22") * KaL)
           .cast("double") / 1000000.0).as("alpha"))
   }
 
-  private val krippendorffOracle = {
-    def shup(num: String, den: String): String =
-      s"(CASE WHEN ($num) < 0 THEN -1 ELSE 1 END) * " +
-        s"(((2000000*ABS($num) + ($den)) - " +
-        s"(2000000*ABS($num) + ($den)) % (2*($den))) // (2*($den)))"
+  private val krippendorffOracle =
     s"""WITH uc AS (SELECT l_orderkey AS u, l_returnflag AS cat,
        |                   COUNT(*) AS nuc
        |            FROM lineitem GROUP BY 1, 2),
@@ -2944,13 +2899,12 @@ object StatsOps {
        |d2 AS (SELECT SUM(CAST(nc AS HUGEINT)) * SUM(CAST(nc AS HUGEINT))
        |              - SUM(CAST(nc AS HUGEINT) * nc) AS d22 FROM marg)
        |SELECT n_units, n AS n_ratings, max_m,
-       |       CAST(${shup("2*o_l", s"CAST(n AS HUGEINT) * $KaL")}
+       |       CAST(${signedHalfUpSql("1000000*(2*o_l)", s"CAST(n AS HUGEINT) * $KaL")}
        |            AS DOUBLE) / 1000000.0 AS do_rate,
-       |       CAST(${shup(s"d22 * $KaL - 2*o_l*(n-1)",
-                           s"d22 * $KaL")}
+       |       CAST(${signedHalfUpSql(s"1000000*(d22 * $KaL - 2*o_l*(n-1))",
+                                      s"d22 * $KaL")}
        |            AS DOUBLE) / 1000000.0 AS alpha
        |FROM units CROSS JOIN d2""".stripMargin
-  }
 
   // --------------------------------------------------------- Hill tail index
   /** Top-k depth for [[hillTail]]. */

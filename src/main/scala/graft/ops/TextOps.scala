@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import Parity.{halfUp, halfUpSql, signedHalfUp}
 
 /** Text-analysis operators for a training-data pipeline over the
   * `documents` table: quality scoring, language-ID heuristic, token
@@ -934,26 +935,16 @@ object TextOps {
         round(sqrt(col("tokens").cast("double")) * 1000000.0, 0).cast("long"))
     val w = Window.partitionBy(lit(1))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    // Spark `/` on longs is DOUBLE division — exact only below 2^53.
-    // `div` keeps the whole quotient on the long lattice, matching the
-    // oracle's `//` exactly at any magnitude the numerator survives.
-    def halfUpRatioE6(num: Column, den: Column): Column = {
-      val n2 = num * 2000000L + den
-      val d2 = den * 2
-      call_function("div", n2 - pmod(n2, d2), d2).cast("double") / 1000000.0
-    }
     perLang
       .withColumn("tot_tokens", sum(col("tokens")).over(w))
       .withColumn("tot_s", sum(col("s_e6")).over(w))
       .select(col("lang"), col("n_docs"), col("tokens"),
-        halfUpRatioE6(col("tokens"), col("tot_tokens")).as("token_share"),
-        halfUpRatioE6(col("s_e6"), col("tot_s")).as("temp_weight"))
+        (halfUp(col("tokens") * 1000000L, col("tot_tokens")).cast("double")
+          / 1000000.0).as("token_share"),
+        (halfUp(col("s_e6") * 1000000L, col("tot_s")).cast("double")
+          / 1000000.0).as("temp_weight"))
       .orderBy(col("lang"))
   }
-
-  private def halfUpRatioE6Sql(num: String, den: String): String =
-    s"CAST(((2000000*$num + $den) - (2000000*$num + $den) % (2*$den)) " +
-      s"// (2*$den) AS DOUBLE) / 1000000.0"
 
   private val temperatureMixOracle =
     s"""WITH agg AS (
@@ -969,8 +960,10 @@ object TextOps {
        |            CAST(SUM(s_e6) OVER () AS BIGINT) AS tot_s
        |  FROM s)
        |SELECT lang, n_docs, tokens,
-       |       ${halfUpRatioE6Sql("tokens", "tot_tokens")} AS token_share,
-       |       ${halfUpRatioE6Sql("s_e6", "tot_s")} AS temp_weight
+       |       CAST(${halfUpSql("1000000*tokens", "tot_tokens")} AS DOUBLE)
+       |         / 1000000.0 AS token_share,
+       |       CAST(${halfUpSql("1000000*s_e6", "tot_s")} AS DOUBLE)
+       |         / 1000000.0 AS temp_weight
        |FROM t ORDER BY lang""".stripMargin
 
   // ---------------------------------------------------- BPE pair count
@@ -1463,19 +1456,13 @@ object TextOps {
       .filter(col("m_e6") > 0L)
       .select(col("w"), col("c"), col("m_e6"))
       .localCheckpoint()
-    def signedHalfUpE6(num: Column, den: Column): Column = {
-      val a = abs(num) * lit(2000000L).cast(dec)
-      val h = ((a + den - pmod(a + den, den * lit(2L).cast(dec))) /
-        (den * lit(2L).cast(dec))).cast("long")
-      when(num < 0, -h).otherwise(h)
-    }
     def step(v: DataFrame): DataFrame = {
       val u = ppmi.join(broadcast(v), col("c") === col("d"))
         .groupBy(col("w"))
         .agg(sum(col("m_e6").cast(dec) * col("v")).as("u"))
       val m = u.agg(max(abs(col("u"))).as("mx"))
       u.crossJoin(broadcast(m))
-        .select(col("w").as("d"), signedHalfUpE6(col("u"), col("mx"))
+        .select(col("w").as("d"), signedHalfUp(col("u") * 1000000L, col("mx"))
           .as("v"))
         .localCheckpoint(eager = true)
     }
@@ -1612,10 +1599,6 @@ object TextOps {
         .as("w"))
     val counts = grams.groupBy(col("source"), col("w"))
       .agg(count(lit(1)).as("c"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     counts.groupBy(col("source"))
       .agg(count(lit(1)).as("v"),
         sum(col("c")).cast("long").as("n_grams"),
@@ -1688,10 +1671,6 @@ object TextOps {
     val ns = toks.groupBy(col("source")).agg(count(lit(1)).as("np"))
     val cs = toks.join(broadcast(top), Seq("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     val f = ns.crossJoin(broadcast(top))
       .join(cs, Seq("source", "w"), "left")
       .withColumn("c", coalesce(col("c"), lit(0L)))
@@ -1906,16 +1885,12 @@ object TextOps {
     val m = pts.agg(count(lit(1)).as("k"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
       sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"))
-    def floorDiv(num: Column, den: Column): Column =
-      ((num - pmod(num, den)) / den).cast("long")
     m.select(col("k").as("n_points"),
-      floorDiv(
+      halfUp(
         (col("k").cast(dec) * col("sxy") - col("sx").cast(dec) * col("sy"))
-          * lit(2000000L).cast(dec) +
-          (col("k").cast(dec) * col("sxx") -
-            col("sx").cast(dec) * col("sx")),
-        (col("k").cast(dec) * col("sxx") - col("sx").cast(dec) * col("sx"))
-          * lit(2L).cast(dec)).as("beta_e6"))
+          * 1000000L,
+        col("k").cast(dec) * col("sxx") - col("sx").cast(dec) * col("sx"))
+        .as("beta_e6"))
   }
 
   private val heapsLawOracle =
@@ -1986,10 +1961,6 @@ object TextOps {
           lit(1.015) * col("words").cast("double") / col("sentences") -
           lit(84.6) * col("syllables").cast("double") / col("words"))
           * 1000000.0, 0).cast("long"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     d.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("flesch_e6")).cast("long").as("sf"),
@@ -3478,9 +3449,6 @@ object TextOps {
     */
   def tokenizerFertility(spark: SparkSession, sfDir: String): DataFrame = {
     val bpePattern = "( ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+)"
-    def halfUpE6(num: Column, den: Column): Column =
-      ((num * 2000000L + den - pmod(num * 2000000L + den, den * 2)) /
-        (den * 2)) / lit(1000000.0)
     Tables.documents(spark, sfDir)
       .select(col("lang"), length(col("text")).cast("long").as("chars"),
         size(expr(s"regexp_extract_all(text, '$bpePattern', 0)")).cast("long")
@@ -3492,8 +3460,10 @@ object TextOps {
         sum(col("n_bpe")).as("bpe_tokens"),
         sum(col("n_ws")).as("ws_tokens"))
       .select(col("lang"), col("n_docs"), col("bpe_tokens"),
-        halfUpE6(col("chars"), col("bpe_tokens")).as("chars_per_token"),
-        halfUpE6(col("bpe_tokens"), col("ws_tokens")).as("fertility"))
+        (halfUp(col("chars") * 1000000L, col("bpe_tokens")).cast("double")
+          / 1000000.0).as("chars_per_token"),
+        (halfUp(col("bpe_tokens") * 1000000L, col("ws_tokens"))
+          .cast("double") / 1000000.0).as("fertility"))
       .orderBy(col("lang"))
   }
 

@@ -42,7 +42,7 @@ object CsvSources {
 
   /** Bump when fixture content/format changes — the generator skips
     * work if the versioned file already exists. */
-  private val FixtureVersion = 1
+  private val FixtureVersion = 2
 
   private def fixtureDir(sfDir: String): File =
     new File(s"${graft.etl.Medallion.warehouseBase}/${new File(sfDir).getName}/fixtures")
@@ -62,14 +62,19 @@ object CsvSources {
     * order, with a short line injected every 97 rows and an over-long
     * line every 211 — both dropped identically by Spark DROPMALFORMED
     * and DuckDB ignore_errors (verified behavior, not assumed).
+    * `viajes` (price/1000) and `viajes_km` (price/100) are 3 dp values
+    * quantized from integer cents by [[graft.ops.Parity.halfUp]], so an
+    * oracle can recompute them exactly with [[graft.ops.Parity.halfUpSql]].
     */
   def mitmaCsvGz(spark: SparkSession, sfDir: String): String = {
     val f = new File(fixtureDir(sfDir), s"mitma_v$FixtureVersion.csv.gz")
     if (!f.exists()) {
+      val cents = floor(col("o_totalprice") * 100 + 0.5)
       val rows = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_orderdate").cast("date").as("o_orderdate"),
-          col("o_totalprice"))
+          graft.ops.Parity.halfUp(cents, lit(100L)).as("viajes_e3"),
+          graft.ops.Parity.halfUp(cents, lit(10L)).as("viajes_km_e3"))
         .orderBy(col("o_orderkey"))
         .collect()
       writeLines(f, gzip = true) {
@@ -79,11 +84,8 @@ object CsvSources {
           val k = r.getLong(0); val c = r.getLong(1)
           val fecha = r.getDate(2).toLocalDate
             .format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE)
-          val price = r.getDouble(3)
-          val viajes = BigDecimal(price / 1000.0)
-            .setScale(3, BigDecimal.RoundingMode.HALF_UP)
-          val viajesKm = BigDecimal(price / 100.0)
-            .setScale(3, BigDecimal.RoundingMode.HALF_UP)
+          val viajes = BigDecimal(r.getLong(3), 3)
+          val viajesKm = BigDecimal(r.getLong(4), 3)
           val line =
             s"$fecha|Z${c % 50}|Z${k % 50}|${k % 24}|D${k % 10}|$viajes|$viajesKm"
           // note: a SINGLE-token line is not malformed to Spark's
@@ -240,9 +242,12 @@ object CsvSources {
 
   /** Reject accounting recomputed from the generator's arithmetic: a
     * short line lands after every 97th order, a long line after every
-    * 211th UNLESS the short rule already fired (else-if). */
-  private val csvCorruptCaptureOracle =
-    """WITH numbered AS (
+    * 211th UNLESS the short rule already fired (else-if); `viajes` is
+    * re-quantized from cents exactly as [[mitmaCsvGz]] writes it. */
+  private val csvCorruptCaptureOracle = {
+    val viajesE3 = graft.ops.Parity.halfUpSql(
+      "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)", "100")
+    s"""WITH numbered AS (
       |  SELECT ROW_NUMBER() OVER (ORDER BY o_orderkey) - 1 AS i,
       |         o_totalprice
       |  FROM orders)
@@ -253,8 +258,9 @@ object CsvSources {
       |         AS n_short,
       |       CAST(SUM(CASE WHEN i % 97 <> 96 AND i % 211 = 210
       |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_long,
-      |       ROUND(SUM(ROUND(o_totalprice / 1000.0, 3)), 4) AS sum_trips
+      |       ROUND(SUM(CAST($viajesE3 AS DOUBLE) / 1000.0), 4) AS sum_trips
       |FROM numbered""".stripMargin
+  }
 
   // ------------------------------------------------------- fixed width
   /** Mainframe-style fixed-width export of the supplier table: 8-digit

@@ -40,8 +40,15 @@ class MedallionSpec extends SparkSpec {
     val dMax = perDate.keys.maxBy(_.getTime)
     val dNew = java.sql.Date.valueOf(dMax.toLocalDate.plusDays(1))
 
+    // the session stays on its default (static) mode: the asserts below
+    // then only pass if the per-write dynamic option took effect, and
+    // the call must leave the session conf exactly as it found it
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
     val out = Medallion.partitionReplace(spark, sfTiny).collect()
       .map(r => r.getDate(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    assert(spark.conf.getOption(modeKey) == modeBefore,
+      "partitionReplace changed the session's partitionOverwriteMode")
 
     assert(out.size == perDate.size + 1, "exactly one new partition expected")
     // replaced partition: same row count (no duplicate append), doubled sum

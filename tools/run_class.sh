@@ -1,8 +1,12 @@
 #!/bin/bash
 # Run a graft main class against the local Spark jars.
 # Usage: tools/run_class.sh <mainClass> [args...]
+# Heap: SPARK_DRIVER_MEM, else half of MemTotal clamped to [2g, 24g]
+# (the build.sbt default).
 MAIN="$1"; shift
-exec java -Xmx96g \
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 24 ? 24 : g) "g"}' /proc/meminfo 2>/dev/null)}"
+exec java -Xmx"${HEAP:-2g}" \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
